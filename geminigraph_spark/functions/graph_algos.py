@@ -9,6 +9,23 @@ combine and comm/compute overlap for free; AQE broadcasts the (small)
 state side of the join at low |V| — which *is* the reference's
 "state is resident on every socket" layout.
 
+Two loops carry the iterative kernels; each of their supersteps is the
+DataFrame form of the reference's process_edges + process_vertices pair
+(core/graph.hpp:1492-1866, 1406-1468):
+
+- ``_pagerank_loop`` — the pre-divided PageRank recurrence behind
+  ``pagerank``, ``personalized_pagerank`` and ``pagerank_weighted``
+  (a lazy chain between interval checkpoints, AQE off for small graphs).
+- ``_frontier_loop`` — the frontier-restricted superstep driver behind
+  CC, warm CC, SSSP, BFS, SCC (through ``_min_fixpoint``) and LP: seed
+  and per-step stats aggregate, the |E_active| < |E|/20 mode rule, the
+  broadcast decisions, checkpointing and one ``IterationMetrics`` row
+  per superstep; each kernel supplies only its message/update step.
+
+The size caps that gate broadcasts and the small-graph conf scope
+(BROADCAST_FRONTIER_MAX, BROADCAST_STATE_MAX, NO_AQE_EDGES_MAX,
+SMALL_GRAPH_ROWS_PER_PARTITION) are module constants.
+
 Parallel edges are collapsed once to (src, dst, cnt) — mathematically
 identical for the sum/min/mode combiners while shrinking every iteration's
 join input (the reference instead pays for every duplicate edge per
@@ -25,12 +42,16 @@ A faster chunked-numpy engine path for the same kernels lives in
 from __future__ import annotations
 
 import os
+import shutil
+import tempfile
+import time
 from collections.abc import Callable
 from contextlib import contextmanager
-from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from ..operators.engine import IterationMetrics
 
 Checkpointer = Callable[[int, DataFrame], DataFrame]
 
@@ -56,18 +77,14 @@ BROADCAST_FRONTIER_MAX = 4_000_000
 #: iteration. Same bounded-residency discipline as
 #: BROADCAST_FRONTIER_MAX; above the cap the shuffle join stands
 #: (results identical either way).
-BROADCAST_STATE_MAX = int(
-    os.environ.get("SPARK_GRAFT_BROADCAST_STATE_MAX", "4000000")
-)
+BROADCAST_STATE_MAX = 4_000_000
 
 
 #: edge-side bound for the scoped AQE-off: AQE's skew-join protection
 #: acts on the EDGE-sized exchanges, so a small-|V|/huge-|E| skewed
 #: graph must keep it even when the state side is tiny. ~50M collapsed
 #: edge rows is where one straggler partition would start to hurt.
-NO_AQE_EDGES_MAX = int(
-    os.environ.get("SPARK_GRAFT_NO_AQE_EDGES_MAX", "50000000")
-)
+NO_AQE_EDGES_MAX = 50_000_000
 
 #: per-shuffle-partition STATE-row target inside the small-graph kernel
 #: scope (guide §2.2: size partitions by data, not by core count): a
@@ -75,9 +92,7 @@ NO_AQE_EDGES_MAX = int(
 #: overhead per exchange. The scope derives the partition count from
 #: |V| / this target (floor 4) and NEVER raises it above the session's
 #: own setting, so large graphs are untouched.
-SMALL_GRAPH_ROWS_PER_PARTITION = int(
-    os.environ.get("SPARK_GRAFT_SMALL_GRAPH_ROWS_PER_PARTITION", "25000")
-)
+SMALL_GRAPH_ROWS_PER_PARTITION = 25_000
 
 
 @contextmanager
@@ -128,16 +143,6 @@ def _small_graph_scope(
     finally:
         conf.set("spark.sql.adaptive.enabled", prev_aqe)
         conf.set("spark.sql.shuffle.partitions", prev_sp)
-
-
-@dataclass
-class DFIterMetrics:
-    """Per-superstep record for the frontier-restricted kernels."""
-
-    iteration: int
-    mode: str  # "sparse" (broadcast frontier) | "dense" (shuffle join)
-    active_vertices: int
-    active_edges: int
 
 
 def _default_ckpt(_i: int, df: DataFrame) -> DataFrame:
@@ -203,6 +208,42 @@ def _collapsed(edges: DataFrame) -> DataFrame:
     return edges.groupBy("src", "dst").agg(F.count(F.lit(1)).alias("cnt"))
 
 
+def _simple_pairs(edges: DataFrame) -> DataFrame:
+    """Distinct undirected pairs (a < b) of the simple graph: parallel
+    edges merged, self-loops dropped."""
+    return (
+        edges.select(
+            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
+        )
+        .where(F.col("a") != F.col("b"))
+        .distinct()
+    )
+
+
+def _bc(df: DataFrame, fits: bool) -> DataFrame:
+    """``df`` with a broadcast hint when its size cap allows one."""
+    return F.broadcast(df) if fits else df
+
+
+@contextmanager
+def _spilling(spark, spill_dir: str | None, prefix: str):
+    """Yield ``spill(df, name)``: write ``df`` as parquet under
+    ``spill_dir`` (kept on exit) or under a fresh ``prefix*`` temp dir
+    (removed on exit) and read it back — a guaranteed-fresh plan root."""
+    tmp = spill_dir or tempfile.mkdtemp(prefix=prefix)
+
+    def spill(df: DataFrame, name: str) -> DataFrame:
+        p = os.path.join(tmp, name)
+        df.write.mode("overwrite").parquet(p)
+        return spark.read.parquet(p)
+
+    try:
+        yield spill
+    finally:
+        if not spill_dir:
+            shutil.rmtree(tmp, ignore_errors=True)
+
+
 def degrees(edges: DataFrame) -> DataFrame:
     """(id, out_degree, in_degree) over the edge multiset — the loader's
     degree pass (core/graph.hpp:798-821): every tuple counts."""
@@ -218,6 +259,89 @@ def degrees(edges: DataFrame) -> DataFrame:
         .join(ind, "id", "left")
         .fillna(0, subset=["out_degree", "in_degree"])
     )
+
+
+def _out_weights(edges: DataFrame, ew: DataFrame, w: str) -> DataFrame:
+    """Every vertex of ``edges`` with its total out-weight ``outd`` in
+    ``ew`` (null for sinks)."""
+    deg = ew.groupBy(F.col("src").alias("id")).agg(
+        F.sum(w).cast("double").alias("outd")
+    )
+    return _vertices_of(edges).join(deg, "id", "left")
+
+
+def _pagerank_loop(
+    ew: DataFrame,
+    w: str,
+    base: DataFrame,
+    tele: Column,
+    d: float,
+    iters: int,
+    checkpoint: Checkpointer,
+    ckpt_interval: int,
+    start: DataFrame | None = None,
+    start_iter: int = 0,
+    redistribute_dangling: bool | None = None,
+) -> DataFrame:
+    """The PageRank loop behind ``pagerank``, ``personalized_pagerank``
+    and ``pagerank_weighted`` (toolkits/pagerank.cpp:24-99):
+    r ← (1-d)·tele + d·Σ_in w·r, the state pre-divided by the vertex's
+    out-weight between iterations, the final iteration undivided.
+    Returns (id long, rank double).
+
+    ``ew`` is the (src, dst, ``w``) edge table and ``base`` the
+    (id, outd[, tele]) frame over every vertex; both are persisted here
+    and released before returning. ``tele`` is the teleport weight over
+    ``base`` (1, or the seed indicator) and also the initial state.
+    ``redistribute_dangling``: None leaves the recurrence without a
+    dangling term (PPR, weighted); False adds a zero term (pagerank's
+    dropped mass); True adds Σ_{outd=0} r / |V| — one extra aggregate per
+    iteration, so states get a lazy localCheckpoint per step instead of
+    a lazy chain."""
+    ck = _IntervalCkpt(
+        checkpoint, ckpt_interval, lazy_chain=not redistribute_dangling
+    )
+    ew.persist()
+    base.persist()
+    n_verts = base.count()
+    # NOTE (r7, measured): broadcast-hinting the state/msgs joins here is
+    # a LOSS for this lazy chain — with ckpt_interval=k the k chained
+    # iterations nest 2k BroadcastExchanges, each a separate driver
+    # collect+rebroadcast job (198k-vertex pipeline graph, 20 iters:
+    # baseline 19.7 s vs 24.5-29.6 s for every hinted variant). The
+    # materialized-per-step kernels (_frontier_loop, hits) DO benefit.
+    try:
+        with _small_graph_scope(ew.sparkSession, n_verts, ew.count()):
+            if start is not None:
+                curr = start.select("id", F.col("rank").alias("r"))
+            else:
+                r0 = F.when(F.col("outd") > 0, tele / F.col("outd")).otherwise(tele)
+                curr = ck.step(-1, base.select("id", r0.alias("r")))
+            for i in range(start_iter, iters):
+                s = F.coalesce(F.col("s"), F.lit(0.0))
+                if redistribute_dangling is not None:
+                    dm = 0.0
+                    if redistribute_dangling:
+                        # dangling vertices are undivided: their r IS their rank
+                        sinks = base.where(F.col("outd") == 0.0).select("id")
+                        dm = curr.join(sinks, "id").agg(F.sum("r")).first()[0] or 0.0
+                        ck.materialized()
+                    s = s + F.lit(dm / n_verts)
+                msgs = (
+                    ew.join(curr.withColumnRenamed("id", "src"), "src")
+                    .groupBy("dst")
+                    .agg(F.sum(F.col("r") * F.col(w)).alias("s"))
+                    .withColumnRenamed("dst", "id")
+                )
+                val = F.lit(1.0 - d) * tele + F.lit(d) * s
+                if i != iters - 1:
+                    val = F.when(F.col("outd") > 0, val / F.col("outd")).otherwise(val)
+                curr = base.join(msgs, "id", "left").select("id", val.alias("r"))
+                curr = ck.step(i, curr, force=(i == iters - 1))
+    finally:
+        base.unpersist()
+        ew.unpersist()
+    return curr.select("id", F.col("r").alias("rank"))
 
 
 def pagerank(
@@ -246,66 +370,80 @@ def pagerank(
     replays ≤ k−1); intermediate iterations stay lazy, so the k-th
     checkpoint runs k chained joins in one job instead of k jobs.
     """
-    ck = _IntervalCkpt(
-        checkpoint, ckpt_interval, lazy_chain=not redistribute_dangling
+    ew = _collapsed(edges)
+    base = _out_weights(edges, ew, "cnt").fillna(0.0, subset=["outd"])
+    return _pagerank_loop(
+        ew, "cnt", base, F.lit(1.0), d, iters, checkpoint, ckpt_interval,
+        start, start_iter, redistribute_dangling,
     )
-    ew = _collapsed(edges).persist()
-    verts = _vertices_of(edges)
-    deg = ew.groupBy(F.col("src").alias("id")).agg(
-        F.sum("cnt").cast("double").alias("outd")
-    )
-    base = verts.join(deg, "id", "left").fillna(0.0, subset=["outd"]).persist()
-    n_verts = base.count()
-    # NOTE (r7, measured): broadcast-hinting the state/msgs joins here is
-    # a LOSS for this lazy-chain kernel — with ckpt_interval=k the k
-    # chained iterations nest 2k BroadcastExchanges, each a separate
-    # driver collect+rebroadcast job (198k-vertex pipeline graph, 20
-    # iters: baseline 19.7 s vs 24.5-29.6 s for every hinted variant).
-    # The materialized-per-step kernels (_min_fixpoint, lp, hits) DO
-    # benefit — see BROADCAST_STATE_MAX there.
-    n_ew = ew.count()
 
-    with _small_graph_scope(edges.sparkSession, n_verts, n_ew):
-        if start is not None:
-            curr = start.select("id", F.col("rank").alias("r"))
-        else:
-            curr = base.select(
-                "id",
-                F.when(F.col("outd") > 0, F.lit(1.0) / F.col("outd"))
-                .otherwise(F.lit(1.0))
-                .alias("r"),
-            )
-            curr = ck.step(-1, curr)
 
-        for i in range(start_iter, iters):
-            dm = 0.0
-            if redistribute_dangling:
-                # dangling vertices are undivided, so their r IS their rank
-                dm = (
-                    curr.join(base.where(F.col("outd") == 0.0).select("id"), "id")
-                    .agg(F.sum("r"))
-                    .first()[0]
-                    or 0.0
+def _frontier_stats(state: DataFrame, *extra: Column):
+    """One aggregate over a frontier state: the frontier size ``nc`` and
+    its active out-edges ``ae`` (graph.hpp:1502-1507)."""
+    return state.agg(
+        F.sum(F.col("changed").cast("long")).alias("nc"),
+        F.sum(F.when(F.col("changed"), F.col("outd")).otherwise(F.lit(0))).alias("ae"),
+        *extra,
+    ).first()
+
+
+def _frontier_loop(
+    init: DataFrame,
+    n_edges: int,
+    step: Callable[[DataFrame, bool, bool, bool], DataFrame],
+    max_iters: int,
+    checkpoint: Checkpointer,
+    ckpt_interval: int,
+    metrics: list[IterationMetrics] | None,
+) -> DataFrame:
+    """The frontier-restricted superstep driver — the distributed shape of
+    the reference's ``process_edges`` loop (core/graph.hpp:1492-1866).
+
+    ``init``: state (id, <value>, outd, changed) — ``changed`` marks the
+    initial frontier, ``outd`` is the vertex's out-degree among the
+    ``n_edges`` message edges. ``step(curr, sparse, small_frontier,
+    small_state)`` returns the next state with the same columns,
+    ``changed`` marking the new frontier. Its flags:
+    ``sparse`` is the reference's mode rule, verbatim (active out-edges
+    < |E|/20, graph.hpp:1508); ``small_frontier`` / ``small_state`` say
+    whether the frontier (≤ BROADCAST_FRONTIER_MAX rows) and the
+    |V|-bounded join sides (|V| ≤ BROADCAST_STATE_MAX) fit a broadcast —
+    the states descend from localCheckpoint, which carries no statistics,
+    so Catalyst never broadcasts them on its own (guide §3.1).
+
+    The frontier size and its active-edge count come from one aggregate
+    over the new state, whose job also materializes the state's lazy
+    localCheckpoint (_IntervalCkpt, lazy_chain=False): one job per
+    superstep, no re-join of consecutive states. An empty frontier ends
+    the loop; the last allowed superstep is always checkpointed. One
+    ``IterationMetrics`` row per superstep goes to ``metrics``."""
+    ck = _IntervalCkpt(checkpoint, ckpt_interval, lazy_chain=False)
+    curr = ck.step(-1, init)
+    stats = _frontier_stats(curr, F.count(F.lit(1)).alias("nv"))
+    n_verts = int(stats["nv"] or 0)  # constant across supersteps
+    small_state = n_verts <= BROADCAST_STATE_MAX
+    with _small_graph_scope(
+        init.sparkSession, n_verts, n_edges, disable_aqe=False
+    ):
+        for i in range(max_iters):
+            n_changed, active_edges = int(stats["nc"] or 0), int(stats["ae"] or 0)
+            if n_changed == 0:
+                break
+            t0 = time.perf_counter()
+            sparse = active_edges < n_edges / SPARSE_DENOM
+            nxt = step(curr, sparse, n_changed <= BROADCAST_FRONTIER_MAX, small_state)
+            curr = ck.step(i, nxt, force=(i == max_iters - 1))
+            stats = _frontier_stats(curr)
+            ck.materialized()  # the aggregate's job stored the new state
+            if metrics is not None:
+                metrics.append(
+                    IterationMetrics(
+                        i, "sparse" if sparse else "dense", n_changed,
+                        active_edges, time.perf_counter() - t0,
+                    )
                 )
-                ck.materialized()
-            msgs = (
-                ew.join(curr.withColumnRenamed("id", "src"), "src")
-                .groupBy("dst")
-                .agg(F.sum(F.col("r") * F.col("cnt")).alias("s"))
-                .withColumnRenamed("dst", "id")
-            )
-            val = F.lit(1.0 - d) + F.lit(d) * (
-                F.coalesce(F.col("s"), F.lit(0.0)) + F.lit(dm / n_verts)
-            )
-            if i != iters - 1:
-                r = F.when(F.col("outd") > 0, val / F.col("outd")).otherwise(val)
-            else:
-                r = val
-            curr = base.join(msgs, "id", "left").select("id", r.alias("r"))
-            curr = ck.step(i, curr, force=(i == iters - 1))
-
-    ew.unpersist()
-    return curr.select("id", F.col("r").alias("rank"))
+    return curr
 
 
 def _min_fixpoint(
@@ -314,90 +452,38 @@ def _min_fixpoint(
     msg_expr,
     max_iters: int,
     checkpoint: Checkpointer,
-    metrics: list[DFIterMetrics] | None = None,
+    metrics: list[IterationMetrics] | None = None,
     ckpt_interval: int = 1,
 ) -> DataFrame:
-    """Frontier-restricted min-combiner fixpoint — the distributed shape of
-    the reference's ``process_edges`` loop (core/graph.hpp:1492-1866).
+    """Min-combiner fixpoint on ``_frontier_loop``. ``ew``: the
+    (persisted) message edge table (src, dst[, w]); ``init``: state
+    (id, val, outd, changed); ``msg_expr``: column over (vsrc[, w]) — the
+    relaxation message. Only the frontier (vertices whose ``val``
+    decreased last superstep) emits — semantics-preserving for a min
+    combiner, the analogue of the reference's sparse/push signal scan
+    (graph.hpp:1540-1551). The frontier is broadcast whenever it fits,
+    dense supersteps included: the /20 rule decides which edges are
+    SCANNED, not which join strategy fits in memory."""
 
-    ``ew``: the (persisted) message edge table (src, dst[, w]).
-    ``init``: state DF (id, val, outd, changed) — ``changed`` marks the
-    initial frontier, ``outd`` is the vertex's out-degree in ``ew``.
-    ``msg_expr``: column over (val[, w]) — the relaxation message.
+    def step(curr, sparse, small_frontier, small_state):
+        fr = curr.where("changed").select(
+            F.col("id").alias("src"), F.col("val").alias("vsrc")
+        )
+        msgs = (
+            ew.join(_bc(fr, small_frontier), "src")
+            .groupBy("dst")
+            .agg(F.min(msg_expr).alias("m"))
+            .withColumnRenamed("dst", "id")
+        )
+        m = F.coalesce(F.col("m"), F.col("val"))
+        return curr.join(_bc(msgs, small_state), "id", "left").select(
+            "id", F.least(F.col("val"), m).alias("val"), "outd",
+            (m < F.col("val")).alias("changed"),
+        )
 
-    Per superstep, messages are generated ONLY from the frontier (vertices
-    whose ``val`` decreased last iteration) — semantics-preserving for a
-    min combiner, and the analogue of the reference's sparse/push signal
-    scan (graph.hpp:1540-1551). Mode rule is the reference's, verbatim:
-    broadcast the frontier (push) iff its active out-edges < |E|/20
-    (graph.hpp:1508); otherwise a plain shuffle join (pull). The changed
-    count AND next frontier's active-edge count come from one cheap
-    aggregate over the just-checkpointed state — no re-join of consecutive
-    states (the superstep costs one materialization + one scan).
-    """
-    n_edges = ew.count()  # ew is persisted by callers; this seeds the rule
-    ck = _IntervalCkpt(checkpoint, ckpt_interval, lazy_chain=False)
-    curr = ck.step(-1, init)
-    stats = curr.agg(
-        F.sum(F.col("changed").cast("long")).alias("nc"),
-        F.sum(F.when(F.col("changed"), F.col("outd")).otherwise(F.lit(0))).alias("ae"),
-        F.count(F.lit(1)).alias("nv"),
-    ).first()
-    n_changed, active_edges = int(stats["nc"] or 0), int(stats["ae"] or 0)
-    # |V| is constant across supersteps; bounds the msgs side (≤ one row
-    # per dst) for the state-join broadcast hint (guide §3.1)
-    n_verts = int(stats["nv"] or 0)
-    small_state = n_verts <= BROADCAST_STATE_MAX
-    with _small_graph_scope(
-        ew.sparkSession, n_verts, n_edges, disable_aqe=False
-    ):
-        for i in range(max_iters):
-            if n_changed == 0:
-                break
-            sparse = active_edges < n_edges / SPARSE_DENOM
-            if metrics is not None:
-                metrics.append(
-                    DFIterMetrics(
-                        i, "sparse" if sparse else "dense", n_changed, active_edges
-                    )
-                )
-            fr = curr.where("changed").select(
-                F.col("id").alias("src"), F.col("val").alias("vsrc")
-            )
-            # the frontier is always ≤ n_changed rows — broadcast it
-            # whenever it fits, dense supersteps included (the /20 rule
-            # decides which edges are SCANNED, not which join strategy
-            # fits in memory)
-            if n_changed <= BROADCAST_FRONTIER_MAX:
-                fr = F.broadcast(fr)
-            msgs = (
-                ew.join(fr, "src")
-                .groupBy("dst")
-                .agg(F.min(msg_expr).alias("m"))
-                .withColumnRenamed("dst", "id")
-            )
-            if small_state:
-                msgs = F.broadcast(msgs)
-            nxt = curr.join(msgs, "id", "left").select(
-                "id",
-                F.least(
-                    F.col("val"), F.coalesce(F.col("m"), F.col("val"))
-                ).alias("val"),
-                "outd",
-                (F.coalesce(F.col("m"), F.col("val")) < F.col("val")).alias(
-                    "changed"
-                ),
-            )
-            curr = ck.step(i, nxt)
-            stats = curr.agg(
-                F.sum(F.col("changed").cast("long")).alias("nc"),
-                F.sum(
-                    F.when(F.col("changed"), F.col("outd")).otherwise(F.lit(0))
-                ).alias("ae"),
-            ).first()
-            ck.materialized()  # the agg's job populated the new state cache
-            n_changed, active_edges = int(stats["nc"] or 0), int(stats["ae"] or 0)
-    return curr.select("id", "val")
+    return _frontier_loop(
+        init, ew.count(), step, max_iters, checkpoint, ckpt_interval, metrics
+    ).select("id", "val")
 
 
 def _with_outd(verts: DataFrame, ew: DataFrame) -> DataFrame:
@@ -409,11 +495,36 @@ def _with_outd(verts: DataFrame, ew: DataFrame) -> DataFrame:
     return verts.join(deg, "id", "left").fillna(0, subset=["outd"])
 
 
+def _warm_state(
+    state: DataFrame, prior_labels: DataFrame, new_edges: DataFrame | None, val: str
+) -> DataFrame:
+    """Warm-start frontier state (id, ``val``, outd, changed) from
+    ``state`` (id, outd): the prior label where one exists, the own id
+    otherwise (new vertices). The frontier is the appended-edge endpoints
+    plus label-less vertices — the only places new information can
+    originate when the prior labels are a fixpoint — or everyone when
+    ``new_edges`` is None."""
+    state = state.join(
+        prior_labels.select("id", F.col("label").alias("pl")), "id", "left"
+    )
+    changed = F.lit(True)
+    if new_edges is not None:
+        seam = _vertices_of(new_edges).withColumn("in_seam", F.lit(True))
+        state = state.join(seam, "id", "left")
+        changed = F.coalesce(F.col("in_seam"), F.lit(False)) | F.col("pl").isNull()
+    return state.select(
+        "id",
+        F.coalesce(F.col("pl"), F.col("id")).alias(val),
+        "outd",
+        changed.alias("changed"),
+    )
+
+
 def connected_components(
     edges: DataFrame,
     max_iters: int = 200,
     checkpoint: Checkpointer = _default_ckpt,
-    metrics: list[DFIterMetrics] | None = None,
+    metrics: list[IterationMetrics] | None = None,
     ckpt_interval: int = 1,
 ) -> DataFrame:
     """HashMin min-label propagation to fixpoint over the symmetrized graph
@@ -423,8 +534,7 @@ def connected_components(
     from .edges import symmetrize_df
 
     sym = symmetrize_df(edges).distinct().persist()
-    verts = _vertices_of(edges)
-    init = _with_outd(verts, sym).select(
+    init = _with_outd(_vertices_of(edges), sym).select(
         "id", F.col("id").alias("val"), "outd", F.lit(True).alias("changed")
     )
     out = _min_fixpoint(
@@ -440,7 +550,7 @@ def connected_components_warm(
     new_edges: DataFrame,
     max_iters: int = 200,
     checkpoint: Checkpointer = _default_ckpt,
-    metrics: list[DFIterMetrics] | None = None,
+    metrics: list[IterationMetrics] | None = None,
     ckpt_interval: int = 1,
 ) -> DataFrame:
     """CC over a graph that GREW by appended edges, warm-started from the
@@ -462,27 +572,8 @@ def connected_components_warm(
     from .edges import symmetrize_df
 
     sym = symmetrize_df(edges).distinct().persist()
-    verts = _vertices_of(edges)
-    seam = (
-        new_edges.select(F.col("src").alias("id"))
-        .unionByName(new_edges.select(F.col("dst").alias("id")))
-        .distinct()
-        .withColumn("in_seam", F.lit(True))
-    )
-    pri = prior_labels.select("id", F.col("label").alias("pl"))
-    init = (
-        _with_outd(verts, sym)
-        .join(pri, "id", "left")
-        .join(seam, "id", "left")
-        .select(
-            "id",
-            F.coalesce(F.col("pl"), F.col("id")).alias("val"),
-            "outd",
-            (
-                F.coalesce(F.col("in_seam"), F.lit(False))
-                | F.col("pl").isNull()
-            ).alias("changed"),
-        )
+    init = _warm_state(
+        _with_outd(_vertices_of(edges), sym), prior_labels, new_edges, "val"
     )
     out = _min_fixpoint(
         sym, init, F.col("vsrc"), max_iters, checkpoint, metrics, ckpt_interval
@@ -496,7 +587,7 @@ def label_propagation(
     iters: int = 10,
     checkpoint: Checkpointer = _default_ckpt,
     ckpt_interval: int = 1,
-    metrics: list[DFIterMetrics] | None = None,
+    metrics: list[IterationMetrics] | None = None,
     prior_labels: DataFrame | None = None,
     new_edges: DataFrame | None = None,
 ) -> DataFrame:
@@ -504,19 +595,17 @@ def label_propagation(
     multiset graph, new label = most frequent incoming label, ties broken
     by smallest label; vertices with no incoming labels keep theirs.
 
-    Frontier-restricted (VERDICT r3 #2, the cc.cpp:48-59 activation
-    discipline applied to A6): a vertex's mode can only change if ≥1
-    in-neighbor's label changed, so once the frontier's active out-edges
-    drop under |E|/20 the recompute is restricted to dsts touched by the
-    frontier — over ALL their in-edges (a mode is not decomposable over a
-    frontier subset, unlike min/sum), with the frontier broadcast to find
-    the touched dsts. Untouched dsts keep their label: their in-label
-    multiset is unchanged, so the restriction is semantics-preserving and
-    the oracle-checked result is identical. Empty frontier ⇒ early exit
-    (synchronous LP at a fixpoint is a no-op forever after).
-
-    Per-step convergence aggregate ⇒ ``ckpt_interval`` uses the lazy
-    localCheckpoint discipline (see _IntervalCkpt).
+    Frontier-restricted on ``_frontier_loop`` (VERDICT r3 #2, the
+    cc.cpp:48-59 activation discipline applied to A6): a vertex's mode
+    can only change if ≥1 in-neighbor's label changed, so once the
+    frontier's active out-edges drop under |E|/20 the recompute is
+    restricted to dsts touched by the frontier — over ALL their in-edges
+    (a mode is not decomposable over a frontier subset, unlike min/sum),
+    with the frontier broadcast to find the touched dsts. Untouched dsts
+    keep their label: their in-label multiset is unchanged, so the
+    restriction is semantics-preserving and the oracle-checked result is
+    identical. Empty frontier ⇒ early exit (synchronous LP at a fixpoint
+    is a no-op forever after).
 
     WARM START (the DF twin of operators/algorithms.lp_engine's
     ``start``/``start_frontier`` contract, VERDICT r5 missing #1): pass
@@ -530,120 +619,54 @@ def label_propagation(
     ``new_edges`` the frontier is the safe "everyone" over-approximation."""
     from .edges import symmetrize_df
 
-    ck = _IntervalCkpt(checkpoint, ckpt_interval, lazy_chain=False)
     sym = _collapsed(symmetrize_df(edges)).persist()
     n_edges = int(sym.agg(F.sum("cnt")).first()[0])
-    verts = _vertices_of(edges)
     deg = sym.groupBy(F.col("src").alias("id")).agg(F.sum("cnt").alias("outd"))
-    init = verts.join(deg, "id", "left").fillna(0, subset=["outd"])
+    init = _vertices_of(edges).join(deg, "id", "left").fillna(0, subset=["outd"])
     if prior_labels is not None:
-        pri = prior_labels.select("id", F.col("label").alias("pl"))
-        init = init.join(pri, "id", "left")
-        if new_edges is not None:
-            seam = (
-                new_edges.select(F.col("src").alias("id"))
-                .unionByName(new_edges.select(F.col("dst").alias("id")))
-                .distinct()
-                .withColumn("in_seam", F.lit(True))
-            )
-            fro = F.coalesce(F.col("in_seam"), F.lit(False)) | F.col("pl").isNull()
-            init = init.join(seam, "id", "left")
-        else:
-            fro = F.lit(True)
-        init = init.select(
-            "id",
-            F.coalesce(F.col("pl"), F.col("id")).alias("label"),
-            "outd",
-            fro.alias("changed"),
-        )
+        init = _warm_state(init, prior_labels, new_edges, "label")
     else:
         init = init.select(
             "id", F.col("id").alias("label"), "outd", F.lit(True).alias("changed")
         )
-    curr = ck.step(-1, init)
-    stats = curr.agg(
-        F.sum(F.col("changed").cast("long")).alias("nc"),
-        F.sum(F.when(F.col("changed"), F.col("outd")).otherwise(F.lit(0))).alias("ae"),
-        F.count(F.lit(1)).alias("nv"),
-    ).first()
-    n_changed, active_edges = int(stats["nc"] or 0), int(stats["ae"] or 0)
-    # state frames descend from localCheckpoint (no stats): hint the |V|-
-    # bounded join sides explicitly when they fit (guide §3.1)
-    small_state = int(stats["nv"] or 0) <= BROADCAST_STATE_MAX
     w = Window.partitionBy("dst").orderBy(F.col("c").desc(), F.col("lsrc").asc())
-    n_verts = int(stats["nv"] or 0)
-    with _small_graph_scope(
-        sym.sparkSession, n_verts, n_edges, disable_aqe=False
-    ):
-        for i in range(iters):
-            if n_changed == 0:
-                break
-            sparse = active_edges < n_edges / SPARSE_DENOM
-            if metrics is not None:
-                metrics.append(
-                    DFIterMetrics(i, "sparse" if sparse else "dense", n_changed, active_edges)
-                )
-            if sparse:
-                # touched dsts from the frontier, then ALL in-edges of those
-                # dsts (plain shuffle join on dst — the touched set is
-                # frontier-sized, not broadcastable in general)
-                fr = curr.where("changed").select(F.col("id").alias("src"))
-                if n_changed <= BROADCAST_FRONTIER_MAX:
-                    fr = F.broadcast(fr)
-                touched = sym.join(fr, "src").select("dst").distinct()
-                if small_state:  # ≤ one row per dst vertex
-                    touched = F.broadcast(touched)
-                base = sym.join(touched, "dst")
-            else:
-                base = sym
-            lab_src = curr.select(
-                F.col("id").alias("src"), F.col("label").alias("lsrc")
-            )
-            if small_state:
-                lab_src = F.broadcast(lab_src)
-            counts = base.join(lab_src, "src").groupBy("dst", "lsrc").agg(
-                F.sum("cnt").alias("c")
-            )
-            pick = (
-                counts.withColumn("rn", F.row_number().over(w))
-                .where(F.col("rn") == 1)
-                .select(F.col("dst").alias("id"), F.col("lsrc").alias("newl"))
-            )
-            if small_state:
-                pick = F.broadcast(pick)
-            curr = ck.step(
-                i,
-                curr.join(pick, "id", "left").select(
-                    "id",
-                    F.coalesce(F.col("newl"), F.col("label")).alias("label"),
-                    "outd",
-                    (F.coalesce(F.col("newl"), F.col("label")) != F.col("label")).alias(
-                        "changed"
-                    ),
-                ),
-                force=(i == iters - 1),
-            )
-            stats = curr.agg(
-                F.sum(F.col("changed").cast("long")).alias("nc"),
-                F.sum(F.when(F.col("changed"), F.col("outd")).otherwise(F.lit(0))).alias("ae"),
-            ).first()
-            ck.materialized()
-            n_changed, active_edges = int(stats["nc"] or 0), int(stats["ae"] or 0)
+
+    def step(curr, sparse, small_frontier, small_state):
+        base = sym
+        if sparse:
+            # touched dsts from the frontier, then ALL in-edges of those
+            # dsts; touched has ≤ one row per vertex, like the state
+            fr = curr.where("changed").select(F.col("id").alias("src"))
+            touched = sym.join(_bc(fr, small_frontier), "src").select("dst").distinct()
+            base = sym.join(_bc(touched, small_state), "dst")
+        lab_src = curr.select(F.col("id").alias("src"), F.col("label").alias("lsrc"))
+        counts = (
+            base.join(_bc(lab_src, small_state), "src")
+            .groupBy("dst", "lsrc")
+            .agg(F.sum("cnt").alias("c"))
+        )
+        pick = (
+            counts.withColumn("rn", F.row_number().over(w))
+            .where(F.col("rn") == 1)
+            .select(F.col("dst").alias("id"), F.col("lsrc").alias("newl"))
+        )
+        new = F.coalesce(F.col("newl"), F.col("label"))
+        return curr.join(_bc(pick, small_state), "id", "left").select(
+            "id", new.alias("label"), "outd", (new != F.col("label")).alias("changed")
+        )
+
+    out = _frontier_loop(
+        init, n_edges, step, iters, checkpoint, ckpt_interval, metrics
+    )
     sym.unpersist()
-    return curr.select("id", "label")
+    return out.select("id", "label")
 
 
 def _oriented(edges: DataFrame) -> DataFrame:
     """Distinct undirected edges (self-loops dropped) oriented by
     (degree, id) rank low→high — SURVEY §2.3 A7; bounds the skew of the
     heavy self-join (hubs become intersection *targets*, never probes)."""
-    und = (
-        edges.select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-    )
+    und = _simple_pairs(edges)
     deg = (
         und.select(F.col("a").alias("v"))
         .unionByName(und.select(F.col("b").alias("v")))
@@ -662,24 +685,24 @@ def _oriented(edges: DataFrame) -> DataFrame:
     )
 
 
-def triangle_count(edges: DataFrame) -> DataFrame:
-    """Global triangle count (1 row: n_triangles long)."""
-    o = _oriented(edges).persist()
-    e1 = o.select(F.col("lo").alias("x"), F.col("hi").alias("y"))
-    e2 = o.select(F.col("lo").alias("y"), F.col("hi").alias("z"))
-    e3 = o.select(F.col("lo").alias("x"), F.col("hi").alias("z"))
-    tri = e1.join(e2, "y").join(e3, ["x", "z"])
-    out = tri.agg(F.count(F.lit(1)).alias("n_triangles"))
-    return out
-
-
-def triangles_per_vertex(edges: DataFrame) -> DataFrame:
-    """(id, n_tri) per vertex (vertices in ≥1 triangle)."""
+def _triangles(edges: DataFrame) -> DataFrame:
+    """(x, y, z) once per triangle: the oriented wedge x→y→z closed by
+    x→z."""
     o = _oriented(edges)
     e1 = o.select(F.col("lo").alias("x"), F.col("hi").alias("y"))
     e2 = o.select(F.col("lo").alias("y"), F.col("hi").alias("z"))
     e3 = o.select(F.col("lo").alias("x"), F.col("hi").alias("z"))
-    tri = e1.join(e2, "y").join(e3, ["x", "z"])
+    return e1.join(e2, "y").join(e3, ["x", "z"])
+
+
+def triangle_count(edges: DataFrame) -> DataFrame:
+    """Global triangle count (1 row: n_triangles long)."""
+    return _triangles(edges).agg(F.count(F.lit(1)).alias("n_triangles"))
+
+
+def triangles_per_vertex(edges: DataFrame) -> DataFrame:
+    """(id, n_tri) per vertex (vertices in ≥1 triangle)."""
+    tri = _triangles(edges)
     corners = (
         tri.select(F.col("x").alias("id"))
         .unionByName(tri.select(F.col("y").alias("id")))
@@ -693,7 +716,7 @@ def sssp(
     root: int = 0,
     max_iters: int = 200,
     checkpoint: Checkpointer = _default_ckpt,
-    metrics: list[DFIterMetrics] | None = None,
+    metrics: list[IterationMetrics] | None = None,
     ckpt_interval: int = 1,
 ) -> DataFrame:
     """Bellman-Ford relaxation to fixpoint, init 1e9 (toolkits/sssp.cpp),
@@ -720,7 +743,7 @@ def bc_dataframe(
     root: int = 0,
     max_levels: int = 200,
     checkpoint: Checkpointer = _default_ckpt,
-    metrics: list[DFIterMetrics] | None = None,
+    metrics: list[IterationMetrics] | None = None,
     on_phase_state: Callable[[str, int, DataFrame], None] | None = None,
     start: tuple[str, int, DataFrame] | None = None,
 ) -> DataFrame:
@@ -781,6 +804,7 @@ def bc_dataframe(
         lv = 0
     if not (start is not None and start[0] == "bwd"):
         for _ in range(max_levels):
+            t0 = time.perf_counter()
             stats = state.agg(
                 F.sum(F.col("newly").cast("long")).alias("nc"),
                 F.sum(F.when(F.col("newly"), F.col("outd")).otherwise(F.lit(0))).alias("ae"),
@@ -789,13 +813,9 @@ def bc_dataframe(
             if n_new == 0:
                 break
             sparse = ae < n_edges / SPARSE_DENOM
-            if metrics is not None:
-                metrics.append(DFIterMetrics(lv, "sparse" if sparse else "dense", n_new, ae))
             fr = state.where("newly").select(F.col("id").alias("src"), "sigma")
-            if sparse and n_new <= BROADCAST_FRONTIER_MAX:
-                fr = F.broadcast(fr)
             msgs = (
-                ew.join(fr, "src")
+                ew.join(_bc(fr, sparse and n_new <= BROADCAST_FRONTIER_MAX), "src")
                 .groupBy("dst")
                 .agg(F.sum(F.col("sigma") * F.col("cnt")).alias("m"))
                 .withColumnRenamed("dst", "id")
@@ -812,6 +832,11 @@ def bc_dataframe(
                     fresh.alias("newly"),
                 ),
             )
+            if metrics is not None:
+                metrics.append(IterationMetrics(
+                    lv, "sparse" if sparse else "dense", n_new, ae,
+                    time.perf_counter() - t0,
+                ))
             if on_phase_state is not None:
                 on_phase_state("fwd", lv, state)
             lv += 1
@@ -821,6 +846,7 @@ def bc_dataframe(
             # dependencies — unlike bc_engine, which loops to completion
             left = int(state.agg(F.sum(F.col("newly").cast("long"))).first()[0] or 0)
             if left > 0:
+                ew.unpersist()
                 raise RuntimeError(
                     f"bc_dataframe: forward BFS still has an active frontier "
                     f"({left} vertices) after max_levels={max_levels}; raise "
@@ -857,19 +883,14 @@ def bc_dataframe(
     }
     ewt = ew.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "cnt")
     for back in range(back0, -1, -1):
+        t0 = time.perf_counter()
         nv, ae = lvl.get(back + 1, (0, 0))
         sparse = ae < n_edges / SPARSE_DENOM
-        if metrics is not None:
-            metrics.append(
-                DFIterMetrics(lv + (maxd - back), "sparse" if sparse else "dense", nv, ae)
-            )
         fr = state.where(F.col("depth") == back + 1).select(
             F.col("id").alias("src"), "dep"
         )
-        if sparse and nv <= BROADCAST_FRONTIER_MAX:
-            fr = F.broadcast(fr)
         msgs = (
-            ewt.join(fr, "src")
+            ewt.join(_bc(fr, sparse and nv <= BROADCAST_FRONTIER_MAX), "src")
             .groupBy("dst")
             .agg(F.sum(F.col("dep") * F.col("cnt")).alias("m"))
             .withColumnRenamed("dst", "id")
@@ -887,6 +908,11 @@ def bc_dataframe(
                 ).otherwise(F.col("dep")).alias("dep"),
             ),
         )
+        if metrics is not None:
+            metrics.append(IterationMetrics(
+                lv + (maxd - back), "sparse" if sparse else "dense", nv, ae,
+                time.perf_counter() - t0,
+            ))
         if on_phase_state is not None:
             on_phase_state("bwd", back, state)
     ew.unpersist()
@@ -903,7 +929,7 @@ def bfs_depths(
     root: int = 0,
     max_iters: int = 200,
     checkpoint: Checkpointer = _default_ckpt,
-    metrics: list[DFIterMetrics] | None = None,
+    metrics: list[IterationMetrics] | None = None,
     ckpt_interval: int = 1,
 ) -> DataFrame:
     """BFS depth from root along directed edges; unreached → -1. Depth is
@@ -954,53 +980,17 @@ def personalized_pagerank(
     join + sum aggregation; the teleport term is a codegen'd CASE, not an
     extra join. ``start``/``start_iter`` follow pagerank's resume
     contract (pre-divided snapshots except the final iteration's)."""
-    ck = _IntervalCkpt(checkpoint, ckpt_interval, lazy_chain=True)
-    ew = _collapsed(edges).persist()
-    verts = _vertices_of(edges)
-    deg = ew.groupBy(F.col("src").alias("id")).agg(
-        F.sum("cnt").cast("double").alias("outd")
-    )
+    ew = _collapsed(edges)
     seed_ind = seeds.select("id").distinct().withColumn("tele", F.lit(1.0))
     base = (
-        verts.join(deg, "id", "left")
+        _out_weights(edges, ew, "cnt")
         .join(seed_ind, "id", "left")
         .fillna({"outd": 0.0, "tele": 0.0})
-        .persist()
     )
-    n_verts = base.count()
-    # no broadcast hints: lazy-chain kernel, see pagerank's r7 note
-
-    with _small_graph_scope(edges.sparkSession, n_verts, ew.count()):
-        if start is not None:
-            curr = start.select("id", F.col("rank").alias("r"))
-        else:
-            curr = base.select(
-                "id",
-                F.when(F.col("outd") > 0, F.col("tele") / F.col("outd"))
-                .otherwise(F.col("tele"))
-                .alias("r"),
-            )
-            curr = ck.step(-1, curr)
-
-        for i in range(start_iter, iters):
-            msgs = (
-                ew.join(curr.withColumnRenamed("id", "src"), "src")
-                .groupBy("dst")
-                .agg(F.sum(F.col("r") * F.col("cnt")).alias("s"))
-                .withColumnRenamed("dst", "id")
-            )
-            val = F.lit(1.0 - d) * F.col("tele") + F.lit(d) * F.coalesce(
-                F.col("s"), F.lit(0.0)
-            )
-            if i != iters - 1:
-                r = F.when(F.col("outd") > 0, val / F.col("outd")).otherwise(val)
-            else:
-                r = val
-            curr = base.join(msgs, "id", "left").select("id", r.alias("r"))
-            curr = ck.step(i, curr, force=(i == iters - 1))
-
-    ew.unpersist()
-    return curr.select("id", F.col("r").alias("rank"))
+    return _pagerank_loop(
+        ew, "cnt", base, F.col("tele"), d, iters, checkpoint, ckpt_interval,
+        start, start_iter,
+    )
 
 
 def k_core(
@@ -1026,16 +1016,7 @@ def k_core(
     counts — the same action that materializes the round's LAZY
     localCheckpoint (the interval-∞ lazy_chain=False discipline: one job
     per round, lineage truncated every round)."""
-    und = (
-        edges.where(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .distinct()
-    )
-    adj = und.select(F.col("a").alias("v"), F.col("b").alias("u")).unionByName(
-        und.select(F.col("b").alias("v"), F.col("a").alias("u"))
-    )
+    adj = _simple_adj(edges, True)
     verts = _vertices_of(edges)
     ck = _IntervalCkpt(checkpoint, 10**9, lazy_chain=False)
 
@@ -1093,10 +1074,6 @@ def hits(
     # join sides explicitly when they fit (guide §3.1), same as pagerank
     n_verts = verts.count()
     small_state = n_verts <= BROADCAST_STATE_MAX
-
-    def hinted(df):
-        return F.broadcast(df) if small_state else df
-
     with _small_graph_scope(
         ew.sparkSession, n_verts, ew.count(), disable_aqe=False
     ):
@@ -1104,12 +1081,12 @@ def hits(
         auth = None
         for i in range(iters):
             araw = (
-                ew.join(hinted(hub.withColumnRenamed("id", "src")), "src")
+                ew.join(_bc(hub.withColumnRenamed("id", "src"), small_state), "src")
                 .groupBy("dst")
                 .agg(F.sum(F.col("h") * F.col("cnt")).alias("a"))
                 .withColumnRenamed("dst", "id")
             )
-            auth = verts.join(hinted(araw), "id", "left").select(
+            auth = verts.join(_bc(araw, small_state), "id", "left").select(
                 "id", F.coalesce(F.col("a"), F.lit(0.0)).alias("a")
             )
             auth = ck.step(2 * i, auth)
@@ -1118,12 +1095,12 @@ def hits(
             if na > 0:
                 auth = auth.select("id", (F.col("a") / F.lit(na)).alias("a"))
             hraw = (
-                ew.join(hinted(auth.withColumnRenamed("id", "dst")), "dst")
+                ew.join(_bc(auth.withColumnRenamed("id", "dst"), small_state), "dst")
                 .groupBy("src")
                 .agg(F.sum(F.col("a") * F.col("cnt")).alias("h"))
                 .withColumnRenamed("src", "id")
             )
-            hub = verts.join(hinted(hraw), "id", "left").select(
+            hub = verts.join(_bc(hraw, small_state), "id", "left").select(
                 "id", F.coalesce(F.col("h"), F.lit(0.0)).alias("h")
             )
             hub = ck.step(2 * i + 1, hub)
@@ -1152,13 +1129,7 @@ def local_clustering(edges: DataFrame) -> DataFrame:
     is one distinct + one groupBy + two left joins — no new shuffle
     class beyond A7."""
     verts = _vertices_of(edges)
-    und = (
-        edges.select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-    )
+    und = _simple_pairs(edges)
     deg = (
         und.select(F.col("a").alias("id"))
         .unionByName(und.select(F.col("b").alias("id")))
@@ -1356,37 +1327,11 @@ def pagerank_weighted(
     typically link-position- or anchor-derived (e.g. 1/(1+link_pos)).
     wedges: (src, dst, w double); parallel edges add their weights.
     Returns (id long, rank double)."""
-    ck = _IntervalCkpt(checkpoint, ckpt_interval, lazy_chain=True)
-    ew = wedges.groupBy("src", "dst").agg(F.sum("w").alias("w")).persist()
-    verts = _vertices_of(wedges)
-    deg = ew.groupBy(F.col("src").alias("id")).agg(F.sum("w").alias("outw"))
-    base = verts.join(deg, "id", "left").fillna(0.0, subset=["outw"]).persist()
-    n_verts = base.count()
-    # no broadcast hints: lazy-chain kernel, see pagerank's r7 note
-    with _small_graph_scope(wedges.sparkSession, n_verts, ew.count()):
-        curr = base.select(
-            "id",
-            F.when(F.col("outw") > 0, F.lit(1.0) / F.col("outw"))
-            .otherwise(F.lit(1.0))
-            .alias("r"),
-        )
-        curr = ck.step(-1, curr)
-        for i in range(iters):
-            msgs = (
-                ew.join(curr.withColumnRenamed("id", "src"), "src")
-                .groupBy("dst")
-                .agg(F.sum(F.col("r") * F.col("w")).alias("s"))
-                .withColumnRenamed("dst", "id")
-            )
-            val = F.lit(1.0 - d) + F.lit(d) * F.coalesce(F.col("s"), F.lit(0.0))
-            if i != iters - 1:
-                r = F.when(F.col("outw") > 0, val / F.col("outw")).otherwise(val)
-            else:
-                r = val
-            curr = base.join(msgs, "id", "left").select("id", r.alias("r"))
-            curr = ck.step(i, curr, force=(i == iters - 1))
-    ew.unpersist()
-    return curr.select("id", F.col("r").alias("rank"))
+    ew = wedges.groupBy("src", "dst").agg(F.sum("w").alias("w"))
+    base = _out_weights(wedges, ew, "w").fillna(0.0, subset=["outd"])
+    return _pagerank_loop(
+        ew, "w", base, F.lit(1.0), d, iters, checkpoint, ckpt_interval
+    )
 
 
 def coreness(
@@ -1420,16 +1365,7 @@ def coreness(
     window partition is the usual neighborhood-operator hot spot (AQE
     territory). The changed-count aggregate doubles as the early exit
     and the lazy-localCheckpoint materializer."""
-    und = (
-        edges.where(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .distinct()
-    )
-    adj = und.select(F.col("a").alias("v"), F.col("b").alias("u")).unionByName(
-        und.select(F.col("b").alias("v"), F.col("a").alias("u"))
-    ).persist()
+    adj = _simple_adj(edges, True).persist()
     verts = _vertices_of(edges)
     deg = adj.groupBy("v").agg(F.count(F.lit(1)).alias("d"))
     cur = verts.join(deg.withColumnRenamed("v", "id"), "id", "left").select(
@@ -1472,14 +1408,7 @@ def _simple_adj(edges: DataFrame, undirected: bool) -> DataFrame:
     when undirected (self-loops dropped), distinct directed pairs
     otherwise (self-loops kept — they never change a BFS depth)."""
     if undirected:
-        und = (
-            edges.where(F.col("src") != F.col("dst"))
-            .select(
-                F.least("src", "dst").alias("a"),
-                F.greatest("src", "dst").alias("b"),
-            )
-            .distinct()
-        )
+        und = _simple_pairs(edges)
         return und.select(
             F.col("a").alias("v"), F.col("b").alias("u")
         ).unionByName(und.select(F.col("b").alias("v"), F.col("a").alias("u")))
@@ -1722,35 +1651,13 @@ def maximal_independent_set(
     and Luby at crawl scale runs ~25-30 rounds — squarely inside the
     creep regime. The spill is the size of the shrinking live set and
     doubles as a free per-round resume point."""
-    import os
-    import shutil
-    import tempfile
-
-    spark = edges.sparkSession
-    tmp = spill_dir or tempfile.mkdtemp(prefix="gemini_mis_")
-    own_tmp = spill_dir is None
-
-    def spill(df: DataFrame, name: str) -> DataFrame:
-        p = os.path.join(tmp, name)
-        df.write.mode("overwrite").parquet(p)
-        return spark.read.parquet(p)
-
-    und = (
-        edges.where(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .distinct()
-    )
-    adj = und.select(F.col("a").alias("v"), F.col("b").alias("u")).unionByName(
-        und.select(F.col("b").alias("v"), F.col("a").alias("u"))
-    )
+    adj = _simple_adj(edges, True)
     verts = _vertices_of(edges)
 
     def pri(c):
         return ((c % MIS_VMOD) * MIS_VMUL + MIS_ADD) % MIS_PMOD
 
-    try:
+    with _spilling(edges.sparkSession, spill_dir, "gemini_mis_") as spill:
         adj = spill(adj, "adj")
         live = spill(adj, "live_-1")
         n_live = live.count()
@@ -1815,11 +1722,8 @@ def maximal_independent_set(
         out = verts.join(flag, "id", "left").select(
             "id", F.coalesce(F.col("in_mis"), F.lit(0)).cast("int").alias("in_mis")
         )
-        out = out.localCheckpoint(eager=True)
-        return out
-    finally:
-        if own_tmp:
-            shutil.rmtree(tmp, ignore_errors=True)
+        return out.localCheckpoint(eager=True)
+
 
 def neighborhood_function(
     edges: DataFrame,
@@ -1951,30 +1855,10 @@ def k_truss(
     shrinks monotonically, so rounds get cheaper as the peel deepens;
     rounds are bounded by the peeling depth. Early exit compares
     live-edge counts."""
-    import os
-    import shutil
-    import tempfile
-
     if k < 2:
         raise ValueError("k_truss requires k >= 2")
-    spark = edges.sparkSession
-    tmp = spill_dir or tempfile.mkdtemp(prefix="gemini_truss_")
-    own_tmp = spill_dir is None
-
-    def spill(df: DataFrame, i: int) -> DataFrame:
-        p = os.path.join(tmp, f"live_{i}")
-        df.write.mode("overwrite").parquet(p)
-        return spark.read.parquet(p)
-
-    und = (
-        edges.where(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .distinct()
-    )
-    try:
-        live = spill(und, -1)
+    with _spilling(edges.sparkSession, spill_dir, "gemini_truss_") as spill:
+        live = spill(_simple_pairs(edges), "live_-1")
         n_live = live.count()
         need = k - 2
         for i in range(max_iters):
@@ -1996,7 +1880,7 @@ def k_truss(
                 .where(F.coalesce(F.col("s"), F.lit(0)) >= need)
                 .select("a", "b")
             )
-            live = spill(nxt, i)
+            live = spill(nxt, f"live_{i}")
             m = live.count()
             if m == n_live:
                 break
@@ -2005,8 +1889,4 @@ def k_truss(
             F.col("a").cast("long").alias("a"), F.col("b").cast("long").alias("b")
         )
         # materialize before the spill dir disappears
-        out = out.localCheckpoint(eager=True)
-        return out
-    finally:
-        if own_tmp:
-            shutil.rmtree(tmp, ignore_errors=True)
+        return out.localCheckpoint(eager=True)
