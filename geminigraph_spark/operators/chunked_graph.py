@@ -47,6 +47,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..plans.partition import default_alpha
+from ..session import is_local_master
 
 _CHUNK_SCHEMA = T.StructType(
     [
@@ -304,6 +305,7 @@ class ChunkedGraph:
             not distributed_boundaries
             and n_vertices is not None
             and SINGLE_SCAN_MIN_V <= n_vertices <= BUILD_DENSE_V_MAX
+            and is_local_master(spark.sparkContext.master)
         ):
             # single-scan fast path (guide §8): ONE pass over the edges
             # writes dst-block bucket files AND the degree bincounts; the
@@ -318,7 +320,8 @@ class ChunkedGraph:
             # and |V| is large enough for the scan savings to beat the
             # partitioned write's per-file commit overhead yet small
             # enough for the dense per-task degree arrays
-            # (SINGLE_SCAN_MIN_V / BUILD_DENSE_V_MAX).
+            # (SINGLE_SCAN_MIN_V / BUILD_DENSE_V_MAX), and only on a local
+            # master: the driver reads the bucket files the tasks write.
             return cls._build_single_scan(
                 spark, e, n_chunks, weighted, n_vertices, spill_dir, t0
             )
@@ -414,11 +417,10 @@ class ChunkedGraph:
         87% of its task time waiting on Arrow batch delivery); two
         shuffle-free local passes (pyarrow block reads) then compute the
         degree proxy and assemble the final degree-weighted chunks. The
-        bucket files play the role of shuffle output; on a multi-node
-        cluster this pattern needs executor-shared storage for the spill
-        dir — the same placement assumption the chunk files themselves
-        already make (module docstring) — or the shuffle path
-        (distributed_boundaries / past the V cap), which assumes nothing."""
+        bucket files play the role of shuffle output, so this path needs
+        storage the driver and every executor share; ``build`` takes it
+        only on a local master (session.is_local_master) and otherwise
+        the shuffle path, which assumes nothing."""
         V, B = int(n_vertices), int(n_chunks)
         # narrow ids to int32 when they fit (guide §2.3): halves the
         # bucket bytes written and re-read

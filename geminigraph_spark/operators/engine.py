@@ -29,16 +29,21 @@ Re-expresses the reference's two dataflow primitives (core/graph.hpp:
   DataFrame ``mapInPandas`` (optimization guide §1.2/§4: per-task work
   and the Python boundary): the metadata rows are a handful of tuples,
   so Catalyst analysis/optimization and the Arrow record-batch framing
-  added ~0.15 s of pure latency to EVERY superstep (measured r7:
-  noop-mapInPandas 360 ms vs noop-RDD 270 ms vs 145 ms bare JVM job on
-  this host) while providing nothing — the payload is already packed
-  binary. Task COUNT is scale-adaptive (guide §2.2 "fewer, larger
-  tasks"): chunks are grouped so each task carries ≥ _EDGES_PER_TASK
-  active edges (measured r7 on 30M edges: 8 tasks 216 ms vs 32 tasks
-  310 ms vs 1 task 499 ms per superstep), bounded below by a small
-  parallelism floor and above by n_chunks — derived from the work size,
-  not from the local core count, so the same rule sizes tasks on a
-  cluster.
+  add ~30-40 ms of pure latency to EVERY superstep while providing
+  nothing — the payload is already packed binary. Measured on 4 vCPU,
+  local[4], CPython 3.11, medians of 20 jobs of 4 tasks in two Spark
+  sessions: noop mapInPandas 122-141 ms, noop RDD 92-100 ms, a
+  Python-free JVM job 69-77 ms. (Before session.py ran the Python
+  workers from worker_daemon, each task also re-read the Spark
+  archives: 293-300, 256-265 and 73-76 ms.) Task COUNT is
+  scale-adaptive (guide §2.2 "fewer, larger tasks"): chunks are grouped
+  so each task carries ≥ _EDGES_PER_TASK active edges, bounded below by
+  a small parallelism floor and above by n_chunks — derived from the
+  work size, not from the local core count, so the same rule sizes
+  tasks on a cluster. Per PageRank superstep on a 4M-edge, 1M-vertex,
+  16-chunk graph, same host: 1 task 125-141 ms, 4 tasks 152-154 ms, 16
+  tasks 324-327 ms (r7, 30M edges at 32 cores: 8 tasks 216 ms, 32
+  tasks 310 ms, 1 task 499 ms).
 
 Mode rule is the reference's, verbatim: sparse (push) iff
 ``active_out_edges < |E| / 20`` (core/graph.hpp:1502-1508). Sparse mode
@@ -62,6 +67,7 @@ from dataclasses import dataclass
 
 import numpy as np
 
+from ..session import is_local_master
 from .chunked_graph import ChunkedGraph
 
 SPARSE_DENOM = 20  # push iff active_edges < n_edges / 20 (graph.hpp:1508)
@@ -364,8 +370,8 @@ class VertexEngine:
         self.g = graph
         self.metrics: list[IterationMetrics] = []
         if transport is None:
-            master = graph.spark.sparkContext.master
-            transport = "file" if master.startswith("local") else "bc"
+            local = is_local_master(graph.spark.sparkContext.master)
+            transport = "file" if local else "bc"
         self.transport = transport
         self._state_dir = tempfile.mkdtemp(prefix="gemini_state_")
         self._seq = 0

@@ -51,7 +51,10 @@ def assign_dense_ids(urls: DataFrame, num_partitions: int | None = None) -> Data
     per-batch pre-dedup feeds ONE range repartition; equal urls land in
     the same range partition, so a partition-local sort + cross-batch
     dedup + running rank replaces the former separate distinct() shuffle
-    AND the row_number window re-sort."""
+    AND the row_number window re-sort.
+
+    The dictionary comes back persisted and materialised, with nothing
+    else left cached; the caller unpersists it."""
     spark = urls.sparkSession
     if num_partitions is None:
         num_partitions = spark.sparkContext.defaultParallelism
@@ -113,9 +116,16 @@ def assign_dense_ids(urls: DataFrame, num_partitions: int | None = None) -> Data
             "pid int, off long",
         )
     )
-    out = d.join(off_df, "pid").select(
-        "url", (F.col("off") + F.col("rn")).alias("id")
+    out = (
+        d.join(off_df, "pid")
+        .select("url", (F.col("off") + F.col("rn")).alias("id"))
+        .persist()
     )
+    # materialise the dictionary from the cached ranks (a write to the
+    # noop sink runs the plan without the exchange a count would add),
+    # then release them
+    out.write.format("noop").mode("overwrite").save()
+    d.unpersist()
     return out
 
 
@@ -132,7 +142,7 @@ def encode_edges(
         all_urls = edge_urls.select(F.col("src_url").alias("url")).unionByName(
             edge_urls.select(F.col("dst_url").alias("url"))
         )
-        vertex_dict = assign_dense_ids(all_urls).persist()
+        vertex_dict = assign_dense_ids(all_urls)
     src_d = vertex_dict.select(
         F.col("url").alias("src_url"), F.col("id").alias("src_id")
     )

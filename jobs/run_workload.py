@@ -89,11 +89,11 @@ def main() -> int:
     )
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = SparkSession.builder.appName(f"gemini-{args.workload}").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    from geminigraph_spark.session import get_submitted_spark
+
+    spark = get_submitted_spark(f"gemini-{args.workload}")
 
     if args.pages:
         from geminigraph_spark.plans.encode import encode_edges

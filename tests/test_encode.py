@@ -31,6 +31,26 @@ def test_dense_ids_partition_count_invariant(spark):
     assert (a["id"].values == b["id"].values).all()
 
 
+def test_dense_ids_leave_only_the_dictionary_cached(spark):
+    """assign_dense_ids releases its intermediate ranks once the
+    dictionary is materialised: the dictionary is the one frame it leaves
+    persisted, and unpersisting it leaves nothing."""
+    sc = spark.sparkContext
+
+    def persisted():
+        return set(sc._jsc.getPersistentRDDs().keySet().toArray())
+
+    urls = spark.createDataFrame(
+        [(f"https://s{i % 13}.example/p/{i}",) for i in range(200)], ["url"]
+    )
+    before = persisted()
+    d = assign_dense_ids(urls, num_partitions=3)
+    assert len(persisted() - before) == 1
+    assert sorted(d.toPandas()["id"]) == list(range(200))
+    d.unpersist()
+    assert persisted() - before == set()
+
+
 def test_encode_pipeline_and_degrees(spark):
     pages = gen_pages_df(spark, 200, partitions=3)
     pairs = extract_links(pages)

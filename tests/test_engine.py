@@ -707,3 +707,30 @@ def test_single_scan_build_matches_shuffle_build(spark, built):
     assert np.allclose(got_d, want_d, atol=0)
     g2.unpersist()
     wg2.unpersist()
+
+
+def test_non_local_master_takes_shuffle_build_and_bc_transport(spark, built, monkeypatch):
+    """The single-scan build and the file state transport hand files
+    between driver and tasks outside Spark, so both gate on
+    session.is_local_master: under a cluster master the build takes the
+    shuffle route even where |V| qualifies for the single scan, and the
+    engine picks the broadcast transport."""
+    from geminigraph_spark.operators import chunked_graph as CG
+
+    src, dst, w, n, g, sym, wg = built
+    df = spark.createDataFrame(
+        [(int(s), int(d)) for s, d in zip(src, dst)], "src long, dst long"
+    )
+    monkeypatch.setattr(CG, "SINGLE_SCAN_MIN_V", 0)
+    monkeypatch.setattr(spark.sparkContext, "master", "spark://gate-test:7077")
+    g2 = ChunkedGraph.build(spark, df, n_chunks=5, n_vertices=n)
+    try:
+        assert not g2.build_meta.get("single_scan")
+        assert np.array_equal(g2.boundaries, g.boundaries)
+        assert np.array_equal(g2.out_degree, g.out_degree)
+        assert np.array_equal(g2.in_degree, g.in_degree)
+        eng = VertexEngine(g2)
+        assert eng.transport == "bc"
+        eng.close()
+    finally:
+        g2.unpersist()
